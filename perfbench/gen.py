@@ -378,17 +378,21 @@ class Backlog:
                     (int(epochs[i]), enc, ev.get("article_type"), ev.get("source"), ev.get("date"))
                 )
 
-    def write(self, directory: str, n_files: int = 32) -> None:
-        """``n_files`` files per copy; ``file_lines`` maps each file's
-        name to its line count."""
+    def write(self, directory: str, n_files: int) -> None:
+        """``n_files`` files per copy. Each further copy of a file is a
+        hard link to the first: a file of its own to the collector, the
+        same bytes on disk. ``file_lines`` maps each file's name to its
+        line count."""
         os.makedirs(directory, exist_ok=True)
         self.file_lines = {}
         for f, chunk in enumerate(np.array_split(np.arange(len(self.lines)), n_files)):
-            text = "".join(self.lines[i] + "\n" for i in chunk.tolist())
+            first = os.path.join(directory, f"part-00-{f:03d}.jsonl")
+            with open(first, "w", encoding="utf-8") as fh:
+                fh.write("".join(self.lines[i] + "\n" for i in chunk.tolist()))
             for c in range(self.copies):
                 name = f"part-{c:02d}-{f:03d}.jsonl"
-                with open(os.path.join(directory, name), "w", encoding="utf-8") as fh:
-                    fh.write(text)
+                if c:
+                    os.link(first, os.path.join(directory, name))
                 self.file_lines[name] = len(chunk)
 
     @property

@@ -66,6 +66,7 @@ def install() -> None:
     from pyspark.sql import SparkSession
 
     from dwds_livestream_spark import session as session_mod
+    from dwds_livestream_spark.sources.tail import FileTailShim
     from dwds_livestream_spark.streaming.hub import BroadcastHub
 
     build = session_mod.build_session
@@ -99,18 +100,13 @@ def install() -> None:
 
     BroadcastHub.publish = timed_publish
 
-    try:
-        from dwds_livestream_spark.sources.tail import FileTailShim
-    except ImportError:  # the tail source may be replaced; nothing to pin
-        FileTailShim = None
-    if FileTailShim is not None:
-        run_forever = FileTailShim.run_forever
+    run_forever = FileTailShim.run_forever
 
-        def phased_run_forever(self):  # the tail's own thread
-            time.sleep((TAIL_PHASE_S - time.time()) % 1.0)
-            return run_forever(self)
+    def phased_run_forever(self):  # the tail's own thread
+        time.sleep((TAIL_PHASE_S - time.time()) % 1.0)
+        return run_forever(self)
 
-        FileTailShim.run_forever = phased_run_forever
+    FileTailShim.run_forever = phased_run_forever
 
     if not _trace:
         return
