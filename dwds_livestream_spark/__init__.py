@@ -19,7 +19,7 @@ Layout
 - ``operators``  relational ops (enrich join, argmin dedup, dedup family,
                  similarity search, analytics, multimodal plumbing)
 - ``sources``    batch + streaming sources (access log dir, JSONL, dimension)
-- ``sinks``      foreachBatch JDBC-style sink, JSONL/SSE framing, sampling
+- ``sinks``      foreachBatch JDBC-style sink, JSONL/SSE framing
 - ``streaming``  end-to-end streaming pipelines + metrics listener
 - ``plans``      the query library exposed through __spark_entry__.py
 """

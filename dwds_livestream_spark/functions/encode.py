@@ -1,4 +1,4 @@
-"""Wire-format / sink-row encodings (SURVEY.md §2.3 P8-P12).
+"""Wire-format / sink-row encodings (SURVEY.md §2.3 P8-P11).
 
 Reference: the collector re-encodes enriched events for the Postgres
 fact table (src/dwds/livestream/collector.clj:82-88) — homograph lemmas
@@ -194,13 +194,3 @@ def events_to_sink_rows(
         .where(F.length("lemma") < max_lemma_len)  # F6
     )
 
-
-def sse_frame(json_col: Column) -> Column:
-    """P12 — SSE framing ``data: <json>\\n\\n`` (http.clj:96-97)."""
-    return F.concat(F.lit("data: "), json_col, F.lit("\n\n"))
-
-
-def forwarded_client(header: Column) -> Column:
-    """P14 — first element of a comma-separated X-Forwarded-For, trimmed
-    (http.clj:26-36)."""
-    return F.trim(F.split(header, ",").getItem(0))

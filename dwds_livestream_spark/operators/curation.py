@@ -1502,11 +1502,12 @@ def psi_drift(
     Distributed shape: the :func:`_ks_quantize` whole-frame grid
     (1-row min/max broadcast) bounds the value domain; then the
     shared :func:`_paired_value_counts` assembly (one histogram
-    fold, broadcast calendar pair frame, union grid) densified to
-    the full bin range by a (pair × bins) sequence explode —
-    calendar × bins sized, never corpus-sized; PSI is one
-    (group, pair)-keyed fold. Output: <group_col>, <period_col>,
-    next_<period_col>, n_prev, n_next, psi (6dp).
+    fold, broadcast calendar pair frame, union grid) yields the
+    present bins per pair. PSI is one (group, pair)-keyed fold over
+    them that adds the empty bins in closed form,
+    ``(bins − n_present) × term₀`` — no (pair × bins) explode;
+    calendar-sized, never corpus-sized. Output: <group_col>,
+    <period_col>, next_<period_col>, n_prev, n_next, psi (6dp).
     """
     if bins < 1:
         raise ValueError(f"bins must be >= 1: {bins}")
@@ -1534,10 +1535,9 @@ def _psi_from_paired(
     totals-dependent constant for every such bin — instead of
     densifying to the full 1..bins grid (an explode + a grid join,
     r12's shape), the fold sums the present bins and adds
-    ``(bins − n_present) × term₀`` once. The term values are
-    bit-identical to the densified form; only the IEEE summation
-    ORDER changes, which sits inside the same ~ulp class the 6dp
-    round already absorbs (the module's documented
+    ``(bins − n_present) × term₀`` once. Against the densified form
+    this is a different rounding within the same ~ulp class the 6dp
+    round absorbs (the module's documented
     embedding_covariance determinism class, swept per-round and
     hash-certified against the unchanged densifying oracle at
     sf0.01/sf0.1). Totals ride a whole-partition window on the

@@ -13,28 +13,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..config import DEFAULT_CONFIG, EngineConfig
+# Admission bound standing in for the reference's 8192-event sliding
+# buffer (collector.clj:127-128): Spark backpressures instead of
+# shedding load (SURVEY.md §1.4, an intentional upgrade).
+MAX_FILES_PER_TRIGGER = 16
 
 
-def read_access_log(spark: SparkSession, path: str) -> DataFrame:
-    """S4 — bounded read of raw log lines (column ``value``)."""
-    return spark.read.text(path)
-
-
-def stream_access_log(
-    spark: SparkSession,
-    path: str,
-    config: EngineConfig = DEFAULT_CONFIG,
-    max_files_per_trigger: int | None = 16,
-) -> DataFrame:
-    """S1 — unbounded read of a log-shipping directory.
-
-    ``maxFilesPerTrigger`` is the admission bound standing in for the
-    reference's 8192-event sliding buffer (collector.clj:127-128) —
-    Spark backpressures instead of shedding load (SURVEY.md §1.4
-    documents this as an intentional upgrade on the persistence path).
-    """
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(path)
+def stream_access_log(spark: SparkSession, path: str) -> DataFrame:
+    """S1 — unbounded read of a log-shipping directory (column ``value``)."""
+    return (
+        spark.readStream.format("text")
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
+        .load(path)
+    )

@@ -36,7 +36,7 @@ class HttpLinePoller:
     """Reconnecting HTTP line reader spooling to ``spool_dir``.
 
     Parameters mirror the reference's source-retry constants
-    (config.source_retry_base_ms / source_retry_cap_ms): backoff starts
+    (collector.clj:48-53, 3 s / 60 s): backoff starts
     at ``base_backoff_s``, doubles per consecutive failure, caps at
     ``max_backoff_s``, and resets once a line is successfully read.
 

@@ -3,7 +3,7 @@ stateful operator — the streaming twin of ``plans.analytics.q_cdc_apply``.
 
 The reference holds its mutable keyed state (the lemma dimension) in an
 atom swapped per refresh (wbdb.clj:39-49); here the state is first-class
-streaming state: a transformWithStateInPandas ValueState per key,
+streaming state: one applyInPandasWithState GroupState per key,
 updated by (ts, event_id)-ordered last-writer-wins. Deletes
 (tombstones) are RETAINED in state rather than cleared — the stored
 (ts, event_id) watermark is what rejects stale replays of pre-delete
@@ -13,18 +13,16 @@ eventually evict tombstoned keys. Output mode Update: each micro-batch
 emits the new live state for every touched key, or a NULL-valued
 tombstone row so a downstream sink can delete.
 
-Requires the RocksDB state store provider (same as sessions.py's
-transformWithState path).
+Runs on either state store provider (HDFS-backed or RocksDB).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -52,18 +50,17 @@ CDC_OUT_SCHEMA = StructType(
 )
 
 
-def latest_state_stream_applyinpandas(
+def latest_state_stream(
     events: DataFrame, delete_below: float = 10.0
 ) -> DataFrame:
-    """applyInPandasWithState form of :func:`latest_state_stream` —
-    identical LWW/tombstone semantics on the Spark 3.4+ GroupState API
-    (no protobuf dependency; the transformWithState form below is the
-    Spark 4-native path)."""
-    from pyspark.sql.streaming.state import (  # noqa: PLC0415
-        GroupState,
-        GroupStateTimeout,
-    )
+    """Keyed LWW state over a stream of upserts/deletes.
 
+    ``events`` needs columns (user_id, event_type, timestamp, event_id,
+    value); a row with value < ``delete_below`` is a delete. Last
+    writer by (timestamp, event_id) wins, including against the stored
+    state — late arrivals older than the current state are ignored,
+    which is what makes the operator safe under at-least-once replay.
+    """
     def track(key, pdfs, state: GroupState):
         best = None
         for pdf in pdfs:
@@ -106,69 +103,3 @@ def latest_state_stream_applyinpandas(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def latest_state_stream(
-    events: DataFrame, delete_below: float = 10.0
-) -> DataFrame:
-    """Keyed LWW state over a stream of upserts/deletes.
-
-    ``events`` needs columns (user_id, event_type, timestamp, event_id,
-    value); a row with value < ``delete_below`` is a delete. Last
-    writer by (timestamp, event_id) wins, including against the stored
-    state — late arrivals older than the current state are ignored,
-    which is what makes the operator safe under at-least-once replay.
-    """
-    from pyspark.sql.streaming.stateful_processor import (  # noqa: PLC0415
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class LatestStateProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("latest", _STATE_SCHEMA)
-
-        def handleInputRows(
-            self, key, rows, timerValues
-        ) -> Iterator[pd.DataFrame]:
-            best = None  # (ts_us, event_id, value)
-            for pdf in rows:
-                for ts, eid, val in zip(
-                    pdf["timestamp"], pdf["event_id"], pdf["value"]
-                ):
-                    cand = (int(ts.value) // 1000, int(eid), float(val))
-                    if best is None or cand[:2] > best[:2]:
-                        best = cand
-            if best is None:
-                return
-            if self._state.exists():
-                cur = tuple(self._state.get())
-                if cur[:2] >= best[:2]:
-                    return  # stale input — state already newer
-            self._state.update(best)
-            user_id, event_type = key
-            deleted = best[2] < delete_below
-            yield pd.DataFrame(
-                {
-                    "user_id": [int(user_id)],
-                    "event_type": [event_type],
-                    "updated_at_us": [best[0]],
-                    "state_value": [None if deleted else best[2]],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    keyed = events.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("event_type").cast("string").alias("event_type"),
-        F.col("timestamp"),
-        F.col("event_id").cast("long").alias("event_id"),
-        F.col("value").cast("double").alias("value"),
-    )
-    return keyed.groupBy("user_id", "event_type").transformWithStateInPandas(
-        statefulProcessor=LatestStateProcessor(),
-        outputStructType=CDC_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -10,17 +10,9 @@ passes the inactivity gap. Sessions need a *timer* — a session closes
 when NO event arrives — so this cannot be a windowed aggregation; it is
 the canonical use for keyed state + event-time timeout.
 
-Two implementations:
-
-- ``sessionize_stream`` — applyInPandasWithState with
-  GroupStateTimeout.EventTimeTimeout. Works on any Spark 3.4+/4.x
-  deployment (HDFS-backed or RocksDB state store).
-- ``sessionize_stream_tws`` — the Spark 4 StatefulProcessor
-  (transformWithStateInPandas) form with explicit timers; requires the
-  RocksDB state store provider AND the python `protobuf` package on
-  workers (its state server speaks protobuf). Import-gated: this
-  container lacks protobuf, so the TWS test skips; semantics are
-  identical to the tested operator.
+``sessionize_stream`` is applyInPandasWithState with
+GroupStateTimeout.EventTimeTimeout, on either state store provider
+(HDFS-backed or RocksDB).
 
 State per key is one fixed-width tuple (start_us, end_us, n), dropped
 on emit — O(open sessions), sharded by key hash across executors; no
@@ -117,96 +109,6 @@ def sessionize_stream(
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def sessionize_stream_tws(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    ts_col: str = "timestamp",
-    key_col: str = "lemma",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Spark 4 StatefulProcessor form (transformWithStateInPandas).
-
-    Requires spark.sql.streaming.stateStore.providerClass =
-    ...state.RocksDBStateStoreProvider and python-protobuf on workers.
-    """
-    from pyspark.sql.streaming.stateful_processor import (  # noqa: PLC0415
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    gap_ms = _duration_seconds(gap) * 1000
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._session = handle.getValueState("session", _STATE_SCHEMA)
-
-        def handleInputRows(
-            self, key, rows, timerValues: TimerValues
-        ) -> Iterator[pd.DataFrame]:
-            ts_us: list[int] = []
-            for pdf in rows:
-                ts_us.extend(int(t.value) // 1000 for t in pdf["timestamp"])
-            if not ts_us:
-                return
-            ts_us.sort()
-            if self._session.exists():
-                cur = list(self._session.get())
-                for t in self._handle.listTimers():
-                    self._handle.deleteTimer(t)
-            else:
-                cur = None
-            for t in ts_us:
-                if cur is None:
-                    cur = [t, t, 1]
-                elif t - cur[1] <= gap_ms * 1000:
-                    cur[0] = min(cur[0], t)  # late event before start
-                    cur[1] = max(cur[1], t)
-                    cur[2] += 1
-                else:
-                    yield _session_row(key[0], *cur)
-                    cur = [t, t, 1]
-            self._session.update(tuple(cur))
-            self._handle.registerTimer(cur[1] // 1000 + gap_ms)
-
-        def handleExpiredTimer(
-            self,
-            key,
-            timerValues: TimerValues,
-            expiredTimerInfo: ExpiredTimerInfo,
-        ) -> Iterator[pd.DataFrame]:
-            if not self._session.exists():
-                return iter(())
-            s, e, n = self._session.get()
-            if expiredTimerInfo.getExpiryTimeInMs() < e // 1000 + gap_ms:
-                return iter(())  # superseded by a re-armed timer
-            self._session.clear()
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]],
-                    "session_start": [pd.Timestamp(s, unit="us")],
-                    "session_end": [pd.Timestamp(e, unit="us")],
-                    "n_events": [n],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    keyed = events.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(ts_col).alias("timestamp"),
-    ).withWatermark("timestamp", watermark)
-    return keyed.groupBy("key").transformWithStateInPandas(
-        statefulProcessor=SessionProcessor(),
-        outputStructType=SESSION_OUT_SCHEMA,
-        outputMode="Append",
-        timeMode="EventTime",
     )
 
 

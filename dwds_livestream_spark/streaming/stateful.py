@@ -3,10 +3,11 @@
 The reference throttles each live subscriber to `epm` events/minute via
 a leaky bucket fed by a filler thread (reference:
 src/dwds/livestream/http.clj:74-78, 109-113; bucket lifecycle CHANGELOG
-v1.4.1). sinks/sampling.py gives the per-micro-batch approximation; this
-operator is the faithful cross-batch form: token state lives in the
-Spark state store, survives micro-batch boundaries and restarts, and is
-keyed (per subscriber / per stream) so it scales horizontally.
+v1.4.1). The live path applies that bucket per subscriber in
+streaming/hub.py; this operator is the in-engine cross-batch form:
+token state lives in the Spark state store, survives micro-batch
+boundaries and restarts, and is keyed (per subscriber / per stream) so
+it scales horizontally.
 
 Spark has no built-in rate-limit operator — this is the
 applyInPandasWithState slot (project brief: custom stateful streaming

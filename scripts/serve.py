@@ -9,6 +9,8 @@ Composition of tested parts: streaming.pipeline.start_live_server
 (parse -> broadcast-left-join enrich -> JSON wire, dimension snapshot
 re-resolved every micro-batch) + streaming.hub.BroadcastHub (per-client
 drop-oldest conflation) + sinks.serving.LivestreamHTTPServer.
+SIGTERM/SIGINT stop the tail, query, server, snapshot and session, and
+the process exits 0.
 
 Usage:
   python scripts/serve.py LOG_DIR DIMENSION_PARQUET \
@@ -22,6 +24,8 @@ import os
 import signal
 import sys
 import tempfile
+import threading
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -80,24 +84,40 @@ def main() -> None:
         publish=hub.publish,
         trigger={"processingTime": args.trigger},
     )
+    # The handlers only flag the stop: a handler that stopped the query
+    # itself would run inside whatever py4j call the main thread is in
+    # and fail with a reentrant call.
+    stop = threading.Event()
+    for sig in (signal.SIGINT, signal.SIGTERM):
+        signal.signal(sig, lambda *_: stop.set())
+    failure: list[Exception] = []
+
+    def watch_query() -> None:
+        try:
+            query.awaitTermination()
+        except Exception as exc:  # noqa: BLE001 — re-raised after shutdown
+            failure.append(exc)
+        stop.set()
+
+    threading.Thread(target=watch_query, name="query-watch", daemon=True).start()
     print(
         f"serving http://{args.host}:{server.port}/api/events and /api/jsonl "
         f"(epm=N to sample); checkpoint={checkpoint}",
         flush=True,
     )
+    # poll rather than stop.wait(): Event.wait holds the Event's lock at
+    # moments, and a handler calling stop.set() then would deadlock
+    while not stop.is_set():
+        time.sleep(0.2)
 
-    def shutdown(*_):
-        if tail is not None:
-            tail.stop()
-        query.stop()
-        server.stop()
-        snapshot.stop()
-        spark.stop()
-        sys.exit(0)
-
-    signal.signal(signal.SIGINT, shutdown)
-    signal.signal(signal.SIGTERM, shutdown)
-    query.awaitTermination()
+    if tail is not None:
+        tail.stop()
+    query.stop()
+    server.stop()
+    snapshot.stop()
+    spark.stop()
+    if failure:
+        raise failure[0]
 
 
 if __name__ == "__main__":

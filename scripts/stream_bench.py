@@ -96,6 +96,45 @@ def main() -> None:
         stdout=subprocess.PIPE, text=True,
     )
 
+    try:
+        out, t0 = _measure(spark, dim, logdir, tmp)
+    finally:
+        # drain the CPU probe (calibration line + every >=3x slow
+        # event); also on error, so the probe never outlives the bench
+        probe.terminate()
+        try:
+            probe_out = probe.communicate(timeout=5)[0] or ""
+        except subprocess.TimeoutExpired:
+            probe.kill()
+            probe_out = probe.communicate()[0] or ""
+    calib = None
+    slow: list[list[float]] = []
+    pre_window: list[list[float]] = []
+    for line in probe_out.splitlines():
+        parts = line.split()
+        if parts[:1] == ["CALIB"]:
+            calib = float(parts[1])
+        elif parts[:1] == ["SLOW"]:
+            at = float(parts[1]) - t0
+            if at < 0:  # during the warmup, before the measured window
+                pre_window.append([round(-at, 1), float(parts[2])])
+            else:
+                slow.append([round(at, 1), float(parts[2])])
+    out["cpu_probe"] = {
+        "calib_ms": round(calib * 1000, 3) if calib else None,
+        # n_slow and max_factor cover the probe's whole lifetime
+        "n_slow": len(slow) + len(pre_window),
+        "max_factor": max((f for _, f in slow + pre_window), default=0.0),
+        # [seconds_into_run, slowdown_factor], worst 20
+        "events": sorted(slow, key=lambda e: -e[1])[:20],
+        # [seconds_before_run, slowdown_factor], worst 20
+        "pre_window_events": sorted(pre_window, key=lambda e: -e[1])[:20],
+    }
+    print(json.dumps(out))
+
+
+def _measure(spark, dim, logdir: str, tmp: str) -> tuple[dict, float]:
+    """The measured live run; returns the result and its start time."""
     stop = threading.Event()
     counter = {"n": 0}
     # latency bookkeeping: the synthetic lines all survive every filter
@@ -262,28 +301,7 @@ def main() -> None:
             if discovery
             else None,
         }
-    # drain the CPU probe: calibration line + every >=3x slow event
-    probe.terminate()
-    try:
-        probe_out = probe.communicate(timeout=5)[0] or ""
-    except Exception:
-        probe_out = ""
-    calib = None
-    slow: list[list[float]] = []
-    for line in probe_out.splitlines():
-        parts = line.split()
-        if parts[:1] == ["CALIB"]:
-            calib = float(parts[1])
-        elif parts[:1] == ["SLOW"]:
-            slow.append([round(float(parts[1]) - t0, 1), float(parts[2])])
-    out["cpu_probe"] = {
-        "calib_ms": round(calib * 1000, 3) if calib else None,
-        "n_slow": len(slow),
-        "max_factor": max((f for _, f in slow), default=0.0),
-        # [seconds_into_run, slowdown_factor], worst 20
-        "events": sorted(slow, key=lambda e: -e[1])[:20],
-    }
-    print(json.dumps(out))
+    return out, t0
 
 
 if __name__ == "__main__":

@@ -1,6 +1,5 @@
 """Structured Streaming parity tests (SURVEY.md §3): live pipeline,
-collector persistence with exactly-once restart, epm sampling, metrics
-listener."""
+collector persistence with exactly-once restart, metrics listener."""
 
 from __future__ import annotations
 
@@ -11,14 +10,12 @@ import time
 import pytest
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from dwds_livestream_spark.functions.access_log import access_log_to_events
 from dwds_livestream_spark.operators.enrich import enrich
 from dwds_livestream_spark.functions.encode import to_json_events
-from dwds_livestream_spark.schemas import DIMENSION, ENRICHED_EVENT
+from dwds_livestream_spark.schemas import DIMENSION
 from dwds_livestream_spark.sinks.fact_sink import parquet_writer, start_fact_sink
-from dwds_livestream_spark.sinks.sampling import sample_epm
 from dwds_livestream_spark.streaming.metrics import ThroughputListener
 from dwds_livestream_spark.streaming.pipeline import collector_stream, start_live_server
 
@@ -114,32 +111,6 @@ def test_collector_exactly_once_restart(spark, tmp_path):
     r = {x.lemma: x for x in rows}["Band#1"]
     assert r.ts == dt.datetime(2024, 12, 8, 23, 0, 18)
     assert r.article_date == dt.date(1974, 1, 1)
-
-
-def test_sample_epm_newest_wins(spark):
-    base = dt.datetime(2024, 12, 8, 23, 0, 0)
-    rows = [
-        Row(timestamp=base + dt.timedelta(seconds=i), lemma=f"l{i}", hidx=None,
-            lemma_type=None, form_type=None, article_type=None, source=None,
-            date=None)
-        for i in range(50)
-    ]
-    df = spark.createDataFrame(rows, ENRICHED_EVENT)
-    out = sample_epm(df, epm=10, ts_col="timestamp")
-    kept = sorted(r.lemma for r in out.collect())
-    # all 50 in one minute -> keep the 10 newest (drop-oldest conflation)
-    assert kept == sorted(f"l{i}" for i in range(40, 50))
-
-    with pytest.raises(ValueError):
-        sample_epm(df, epm=0)
-
-    # the transformation-shaped streaming variant is an intentional
-    # capability gate (VERDICT r7 nit): the real forms are foreachBatch
-    # sample_epm, rate_limit_stateful, and the per-subscriber hub limit
-    from dwds_livestream_spark.sinks.sampling import sample_epm_streaming
-
-    with pytest.raises(NotImplementedError, match="foreachBatch"):
-        sample_epm_streaming(df, epm=10)
 
 
 def test_throughput_listener(spark, tmp_path, dim):

@@ -4,25 +4,11 @@ by (ts, event_id), deletes emit tombstones, stale replays are ignored
 
 from __future__ import annotations
 
-import importlib.util
 import json
 import os
 import time
 
-import pytest
-
-from dwds_livestream_spark.streaming.cdc import (
-    latest_state_stream,
-    latest_state_stream_applyinpandas,
-)
-
-ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-try:
-    HAS_PROTOBUF = importlib.util.find_spec("google.protobuf") is not None
-except ModuleNotFoundError:
-    HAS_PROTOBUF = False
+from dwds_livestream_spark.streaming.cdc import latest_state_stream
 
 
 def _row(eid: int, ts: str, uid: int, etype: str, value: float) -> str:
@@ -46,20 +32,7 @@ def _read_stream(spark, srcdir):
     )
 
 
-@pytest.mark.parametrize(
-    "impl",
-    [
-        latest_state_stream_applyinpandas,
-        pytest.param(
-            latest_state_stream,
-            marks=pytest.mark.skipif(
-                not HAS_PROTOBUF, reason="transformWithState needs protobuf"
-            ),
-        ),
-    ],
-    ids=["applyInPandas", "tws"],
-)
-def test_lww_upsert_delete_and_stale_replay(spark, tmp_path, impl):
+def test_lww_upsert_delete_and_stale_replay(spark, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
     # batch 1: initial state for two keys
@@ -86,25 +59,16 @@ def test_lww_upsert_delete_and_stale_replay(spark, tmp_path, impl):
     for i, f in enumerate(sorted(src.iterdir())):
         os.utime(f, (now + i, now + i))
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB)
-    try:
-        out = impl(_read_stream(spark, src))
-        rows: list = []
-        q = (
-            out.writeStream.outputMode("update")
-            .foreachBatch(lambda b, i: rows.append((i, b.collect())))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    out = latest_state_stream(_read_stream(spark, src))
+    rows: list = []
+    q = (
+        out.writeStream.outputMode("update")
+        .foreachBatch(lambda b, i: rows.append((i, b.collect())))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
 
     emitted = [r for _, batch in rows for r in batch]
     by_batch_key = {(b, r.user_id): r for b, batch in rows for r in batch}

@@ -5,25 +5,11 @@ micro-batches, and handle interleaved keys."""
 from __future__ import annotations
 
 import datetime as dt
-import importlib.util
 import json
 import os
 import time
 
-import pytest
-
-from dwds_livestream_spark.streaming.sessions import (
-    sessionize_stream,
-    sessionize_stream_tws,
-)
-
-ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-try:
-    HAS_PROTOBUF = importlib.util.find_spec("google.protobuf") is not None
-except ModuleNotFoundError:
-    HAS_PROTOBUF = False
+from dwds_livestream_spark.streaming.sessions import sessionize_stream
 
 
 def _jsonl(ts: str, lemma: str) -> str:
@@ -127,28 +113,6 @@ def test_sessionize_stream_extends_across_batches(spark, tmp_path):
     assert len(x) == 1
     assert x[0].n_events == 3
     assert x[0].session_end == dt.datetime(2024, 1, 1, 10, 0, 50)
-
-
-@pytest.mark.skipif(
-    not HAS_PROTOBUF,
-    reason="transformWithStateInPandas state server needs python-protobuf",
-)
-def test_sessionize_stream_tws_closes_on_gap(spark, tmp_path):
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB)
-    try:
-        src = tmp_path / "src"
-        _write_gap_fixture(src)
-        out = sessionize_stream_tws(
-            _read_stream(spark, src), gap="1 minute", watermark="10 seconds"
-        )
-        _check_gap_sessions(_run_append(out, tmp_path, "tws"))
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def test_sessionize_stream_late_event_moves_session_start_back(
